@@ -3,7 +3,9 @@ package graft.sources
 import java.util
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{BlockLocation, FileStatus, FileSystem, LocatedFileStatus, Path}
+import org.apache.hadoop.fs.viewfs.ViewFileSystem
+import org.apache.hadoop.hdfs.DistributedFileSystem
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -375,31 +377,23 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
       // its own offsets index so no single task scans it alone.
       //
       // Planning I/O: shard byte sizes come from the manifest (recorded
-      // at commit); block-location hosts come from ONE batched
-      // listLocatedStatus of the shard directory. Total filesystem calls
-      // are O(1) in the shard count — never a per-shard getFileStatus
-      // loop (10k shards would mean 10k serial NameNode RPCs before the
-      // first task launches).
+      // at commit); block-location hosts come from one listing of the
+      // shard directory (BvGraphScan.listBlocks) — O(1) NameNode calls
+      // on HDFS and zero subprocesses elsewhere. Never a per-shard
+      // getFileStatus loop (10k shards would mean 10k serial NameNode
+      // RPCs before the first task launches).
       val conf = new Configuration()
       val dir = new Path(basename + ".d")
-      val fs = dir.getFileSystem(conf)
-      val located: Map[String, org.apache.hadoop.fs.LocatedFileStatus] =
-        try {
-          val it = fs.listLocatedStatus(dir)
-          val b = Map.newBuilder[String, org.apache.hadoop.fs.LocatedFileStatus]
-          while (it.hasNext) {
-            val st = it.next()
-            b += st.getPath.toUri.getPath -> st
-          }
-          b.result()
-        } catch { case _: Exception => Map.empty }
+      val listed =
+        try BvGraphScan.listBlocks(dir.getFileSystem(conf), dir)
+        catch { case _: Exception => Map.empty[String, BvGraphScan.FileBlocks] }
       def statusFor(base: String) =
-        located.get(new Path(base + ".graph").toUri.getPath)
+        listed.get(new Path(base + ".graph").toUri.getPath)
       // hosts of the blocks overlapping [startByte, endByte) — same
       // locality contract as the reference's NodeIteratorInputSplit
       // (io/NodeIteratorInputSplit.java:48-50) and our unsharded path
       def hostsFor(base: String, startByte: Long, endByte: Long): Array[String] =
-        statusFor(base).map(_.getBlockLocations
+        statusFor(base).map(_.blocks
           .filter(b => b.getOffset < endByte && b.getOffset + b.getLength > startByte)
           .flatMap(_.getHosts).distinct).getOrElse(Array.empty)
 
@@ -425,7 +419,7 @@ class BvGraphScan(basename: String, splits: Option[Int], required: StructType,
           val localUntil = (gu - sh.from).toInt
           val graphBytes =
             if (sh.bytes >= 0) sh.bytes // recorded at commit — no I/O
-            else statusFor(sh.base).map(_.getLen).getOrElse(0L)
+            else statusFor(sh.base).map(_.len).getOrElse(0L)
           if (graphBytes <= 2 * BvGraphTable.TARGET_SPLIT_BYTES)
             Seq(BvInputPartition(sh.base, localFrom, localUntil,
               sh.from, hostsFor(sh.base, 0L, Long.MaxValue)): InputPartition)
@@ -512,6 +506,36 @@ object BvGraphScan {
   case object SumOutdegree extends PushedAgg { override def toString = "SUM(outdegree)" }
   case object MinId extends PushedAgg { override def toString = "MIN(id)" }
   case object MaxId extends PushedAgg { override def toString = "MAX(id)" }
+
+  /** What planning keeps of a listed file: its length and block locations. */
+  case class FileBlocks(len: Long, blocks: Array[BlockLocation])
+
+  /** Length and block locations of every entry directly under `dir`,
+    * keyed by URI path. HDFS and viewfs answer one batched
+    * `listLocatedStatus` (one NameNode call whatever the file count).
+    * Everywhere else this is `listStatus` plus `getFileBlockLocations`
+    * per file: the generic `listLocatedStatus` copy-constructs a
+    * `LocatedFileStatus`, whose constructor calls `getPermission`, and
+    * without libhadoop the local filesystem answers that by forking
+    * `ls -ld` per file. Spark's `HadoopFSUtils.listLeafFiles` avoids that
+    * constructor for the same reason; so must this. */
+  def listBlocks(fs: FileSystem, dir: Path): Map[String, FileBlocks] = {
+    val statuses: Array[FileStatus] = fs match {
+      case _: DistributedFileSystem | _: ViewFileSystem =>
+        val it = fs.listLocatedStatus(dir)
+        val b = Array.newBuilder[FileStatus]
+        while (it.hasNext) b += it.next()
+        b.result()
+      case _ => fs.listStatus(dir)
+    }
+    statuses.map { st =>
+      val blocks = st match {
+        case l: LocatedFileStatus => l.getBlockLocations
+        case _ => fs.getFileBlockLocations(st, 0L, st.getLen)
+      }
+      st.getPath.toUri.getPath -> FileBlocks(st.getLen, blocks)
+    }.toMap
+  }
 }
 
 /** Single synthetic partition carrying metadata-derived aggregate values

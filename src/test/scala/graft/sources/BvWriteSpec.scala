@@ -30,6 +30,31 @@ class BvWriteSpec extends AnyFunSuite {
     }
   }
 
+  /** The partitions a plain `bvgraph` read of `base` plans. */
+  private def plannedPartitions(base: String): Seq[BvInputPartition] =
+    spark.read.format("bvgraph").option("basename", base).load()
+      .queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+      }.head.partitions.flatten.collect { case p: BvInputPartition => p }
+
+  /** Runs `body` under a JFR recording of `jdk.ProcessStart` only, and
+    * returns its result with the command line of every process the JVM
+    * started meanwhile. */
+  private def processStarts[T](body: => T): (T, Seq[String]) = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val out = try body finally rec.stop()
+    val file = java.nio.file.Files.createTempFile("forks", ".jfr")
+    try {
+      rec.dump(file)
+      import scala.jdk.CollectionConverters._
+      (out, jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command")))
+    } finally { rec.close(); java.nio.file.Files.deleteIfExists(file) }
+  }
+
   test("distributed write -> sharded read round-trips") {
     val adj = randomAdj(2000, 77L)
     val base = java.nio.file.Files.createTempDirectory("bvw").toString + "/g"
@@ -189,15 +214,58 @@ class BvWriteSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("bvw").toString + "/g"
     adjDf(adj).write.format("bvgraph").option("basename", base)
       .option("shards", 3).mode("overwrite").save()
-    val df = spark.read.format("bvgraph").option("basename", base).load()
-    val scans = df.queryExecution.executedPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }
-    val parts = scans.head.partitions.flatten.collect { case p: BvInputPartition => p }
+    val parts = plannedPartitions(base)
     assert(parts.nonEmpty)
     // local FS reports localhost block hosts — the point is the sharded
     // path populates preferredLocations like the unsharded path does
     parts.foreach(p => assert(p.hosts.nonEmpty, s"no hosts on $p"))
+  }
+
+  test("scan planning starts no subprocess; sharded hosts match listLocatedStatus") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.Path
+    val adj = randomAdj(400, 41L)
+    val dir = java.nio.file.Files.createTempDirectory("bvw").toString
+    val base = s"$dir/g"
+    adjDf(adj).write.format("bvgraph").option("basename", base)
+      .option("shards", 3).mode("overwrite").save()
+    val mf = BvShards.readManifest(base).get
+    assert(mf.shards.length == 3)
+    // a LocatedFileStatus copied from a local status forks `ls` for its
+    // permission; the sharded planner must never build one off HDFS
+    val (parts, forks) = processStarts(plannedPartitions(base))
+    assert(forks.isEmpty, s"sharded planning started processes: $forks")
+    assert(parts.map(p => (p.basename, p.idOffset + p.from, p.idOffset + p.until)) ==
+      mf.shards.map(sh => (sh.base, sh.from, sh.until)))
+    // same hosts the batched located listing reports for each shard file
+    val shardDir = new Path(base + ".d")
+    val fs = shardDir.getFileSystem(new Configuration())
+    val it = fs.listLocatedStatus(shardDir)
+    val located = scala.collection.mutable.Map.empty[String, Seq[String]]
+    while (it.hasNext) {
+      val st = it.next()
+      located(st.getPath.toUri.getPath) =
+        st.getBlockLocations.toSeq.flatMap(_.getHosts).distinct
+    }
+    parts.foreach { p =>
+      val want = located(new Path(p.basename + ".graph").toUri.getPath)
+      assert(want.nonEmpty && p.hosts.toSeq == want, s"hosts of $p")
+    }
+
+    // the unsharded path and the Hadoop InputFormat stay fork-free too
+    val flat = s"$dir/flat"
+    graft.bv.BvEncoder().write(flat, adj)
+    val (flatParts, flatForks) = processStarts(plannedPartitions(flat))
+    assert(flatParts.nonEmpty && flatForks.isEmpty,
+      s"unsharded planning started processes: $flatForks")
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      new Configuration(spark.sparkContext.hadoopConfiguration))
+    graft.hadoop.WebGraphInputFormat.setBasename(job, flat)
+    graft.hadoop.WebGraphInputFormat.setNumberOfSplits(job, 4)
+    val (splits, splitForks) =
+      processStarts(new graft.hadoop.WebGraphInputFormat().getSplits(job))
+    assert(splits.size == 4 && splitForks.isEmpty,
+      s"getSplits started processes: $splitForks")
   }
 
   test("aggregate pushdown is exact on non-tiled manifests (ids not from 0)") {
@@ -241,12 +309,17 @@ class BvWriteSpec extends AnyFunSuite {
     val back = df.collect().map(r => r.getInt(0) -> r.getSeq[Int](1).toArray).toMap
     adj.indices.foreach(x => assert(back(x).sameElements(adj(x)), s"node $x"))
     // hosts still come from the directory listing
-    val scans = spark.read.format("bvgraph").option("basename", base).load()
-      .queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-      }
-    val parts = scans.head.partitions.flatten.collect { case p: BvInputPartition => p }
+    val parts = plannedPartitions(base)
     parts.foreach(p => assert(p.hosts.nonEmpty, s"no hosts on $p"))
+    // and so do the shard sizes planning falls back to: the listed
+    // lengths are the real .graph file sizes
+    val shardDir = new org.apache.hadoop.fs.Path(base + ".d")
+    val listed = BvGraphScan.listBlocks(
+      shardDir.getFileSystem(new org.apache.hadoop.conf.Configuration()), shardDir)
+    mf.shards.foreach { sh =>
+      val graph = new org.apache.hadoop.fs.Path(sh.base + ".graph").toUri.getPath
+      assert(listed(graph).len == new java.io.File(graph).length(), s"size of $sh")
+    }
   }
 
   test("Long manifest ranges: id-filtered scans of in-range shards work past 2^31") {
